@@ -2,10 +2,19 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Throwaway micro-benchmark for perf triage (not part of the contract). */
+/** Micro-benchmark probes for perf triage (not part of the contract). The
+  * probe is selected by setting one of [[Modes]] in the environment (its
+  * value is the probe's size or argument list); with none set, Micro
+  * prints the mode names and exits 2. */
 object Micro {
+  val Modes: Seq[String] = Seq("QUERY", "EXPLAIN", "SKEW_STRESS", "REMAP_SCALE",
+    "PUBLISH_SCALE", "REMAP_SAT", "CANON_SCALE", "CANON_PLAN", "CANON_VPS")
+
   def main(args: Array[String]): Unit = {
-    val n = sys.env.getOrElse("N", "8000").toLong
+    if (!Modes.exists(sys.env.contains)) {
+      System.err.println(s"graft.Micro: no known mode set; set one of ${Modes.mkString(", ")}")
+      sys.exit(2)
+    }
     val spark = Bench.mkSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "16"))
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
@@ -21,71 +30,12 @@ object Micro {
         time(s"$q#$r")(SparkEntry.queries(q)(spark, dir).count())
       spark.stop(); return
     }
-    if (sys.env.contains("EXTRACT_SCALE")) {
-      // pure-COMPUTE scaling probe: extraction + checksum, zero writes —
-      // isolates how much of the e2e efficiency gap is the kernel write
-      // wall vs the compute path itself. Input = stored page table (same
-      // shape as the e2e bench); result forced via an order-insensitive
-      // checksum aggregate.
-      val pages = sys.env("EXTRACT_SCALE").toLong
-      val root = Bench.scratchRoot("micro_extract")
-      graft.sources.PageGen.snapshot(spark, pages, 0)
-        .write.mode("overwrite").parquet(root + "/pages")
-      val stored = spark.read.parquet(root + "/pages")
-      // JIT warmup on a slice, then the timed passes
-      def pass(df: org.apache.spark.sql.DataFrame): Long =
-        graft.extract.TypedExtractor.pageQuads(df)
-          .agg(bit_xor(xxhash64(col("s"), col("p"), col("oLex"), col("g"))))
-          .head().getLong(0)
-      pass(stored.limit(20000))
-      for (r <- 1 to 2) time(s"extract+checksum#$r (no writes)")(pass(stored))
-      // + ONE corpus shuffle (the support aggregation shape), still no sink
-      def passAgg(df: org.apache.spark.sql.DataFrame): Long =
-        graft.extract.TypedExtractor.pageQuads(df)
-          .groupBy("s", "p", "oLex", "oKind", "oDtype", "oLang", "g")
-          .agg(count(lit(1)).as("n"))
-          .agg(bit_xor(xxhash64(col("s"), col("n")))).head().getLong(0)
-      passAgg(stored.limit(20000))
-      for (r <- 1 to 2) time(s"extract+agg+checksum#$r (1 shuffle)")(passAgg(stored))
-      spark.stop(); return
-    }
     if (sys.env.contains("EXPLAIN")) {
       val dir = "/root/testdata/sf0.01"
       for (q <- sys.env("EXPLAIN").split(",")) {
         println(s"===== $q =====")
         SparkEntry.queries(q)(spark, dir).explain("formatted")
       }
-      spark.stop(); return
-    }
-    if (sys.env.contains("SHUFFLE_KERNEL")) {
-      // isolates the shuffle + parquet-write path (the flat stages):
-      // N synthetic ~200B rows -> hash repartition -> snappy parquet
-      val rows = sys.env("SHUFFLE_KERNEL").toLong
-      val out = Bench.scratchRoot("micro_shuffle")
-      val df = spark.range(0, rows)
-        .select(col("id"),
-          pmod(xxhash64(col("id")), lit(32)).cast("int").as("bucket"),
-          md5(col("id").cast("string")).as("p1"),
-          concat(lit("http://kg.example.org/entity/"), md5(concat(col("id").cast("string"), lit("x")))).as("p2"),
-          concat(lit("https://host"), pmod(col("id"), lit(97)), lit(".example.org/page/"), col("id")).as("p3"))
-      time("gen compute only (no IO)")(df.select(xxhash64(col("p1"), col("p2"), col("p3")))
-        .agg(bit_xor(col("xxhash64(p1, p2, p3)"))).head())
-      time("gen only (no shuffle)")(df.write.mode("overwrite").parquet(out + "/raw"))
-      time("gen->disk /tmp")(df.write.mode("overwrite")
-        .parquet("/tmp/micro_disk_" + rows))
-      time("shuffle+write warm")(df.repartition(32, col("bucket"))
-        .write.mode("overwrite").partitionBy("bucket").parquet(out + "/w"))
-      time("shuffle+write 1")(df.repartition(32, col("bucket"))
-        .write.mode("overwrite").partitionBy("bucket").parquet(out + "/p1"))
-      time("shuffle only (noop agg)")(df.repartition(32, col("bucket"))
-        .agg(count(lit(1))).head())
-      for (w <- Seq(4, 8, 16, 32, 64)) {
-        time(s"write tasks=$w")(df.repartition(w, col("bucket"))
-          .write.mode("overwrite").parquet(out + s"/w$w"))
-      }
-      time("read+shuffle+write")(spark.read.parquet(out + "/raw")
-        .repartition(32, col("bucket"))
-        .write.mode("overwrite").partitionBy("bucket").parquet(out + "/p2"))
       spark.stop(); return
     }
     if (sys.env.contains("SKEW_STRESS")) {
@@ -124,86 +74,6 @@ object Micro {
       val hubComp = labels.filter(col("component") === "hub0").count()
       assert(hubComp == nEdges / 10 + 1, s"hub component $hubComp members")
       println(s"[micro] skew CC hubComponent=$hubComp OK")
-      spark.stop(); return
-    }
-    if (sys.env.contains("PARQUET_SCALE")) {
-      // isolates the parquet SINK wall (the ~1.7x-of-4x phases in the e2e
-      // decomposition): quad-shaped rows -> parquet on tmpfs, per codec,
-      // write and read-back timed separately. Run pinned at 8 and 32 cores
-      // and compare speedups.
-      val rows = sys.env("PARQUET_SCALE").toLong
-      val out = Bench.scratchRoot("micro_pq")
-      val df = spark.range(0, rows)
-        .select(col("id"),
-          concat(lit("http://kg.example.org/entity/"), md5(concat(col("id").cast("string"), lit("s")))).as("s"),
-          concat(lit("http://kg.example.org/rel/"), pmod(col("id"), lit(40))).as("p"),
-          concat(lit("http://kg.example.org/entity/"), md5(concat(col("id").cast("string"), lit("o")))).as("oLex"),
-          lit(0).as("oKind"), lit(null.asInstanceOf[String]).as("oDtype"),
-          lit(null.asInstanceOf[String]).as("oLang"),
-          concat(lit("https://host"), pmod(col("id"), lit(97)), lit(".example.org/")).as("g"),
-          pmod(xxhash64(col("id")), lit(32)).cast("int").as("bucket"))
-        .localCheckpoint()
-      for (codec <- Seq("snappy", "none", "lz4", "zstd")) {
-        spark.conf.set("spark.sql.parquet.compression.codec", codec)
-        time(s"pq write codec=$codec warm")(df.write.mode("overwrite").parquet(s"$out/$codec"))
-        time(s"pq write codec=$codec")(df.write.mode("overwrite").parquet(s"$out/$codec"))
-        val sz = {
-          def du(f: java.io.File): Long =
-            if (f.isFile) f.length
-            else Option(f.listFiles()).map(_.map(du).sum).getOrElse(0L)
-          du(new java.io.File(s"$out/$codec")) / (1 << 20)
-        }
-        println(s"  codec=$codec size=${sz}MB")
-        time(s"pq read codec=$codec")(spark.read.parquet(s"$out/$codec")
-          .agg(bit_xor(xxhash64(col("s")))).head())
-      }
-      spark.stop(); return
-    }
-    if (sys.env.contains("MINHASH_HOF")) {
-      // pins the cost of the HOF aggregate()/transform() signature path
-      // (CodegenFallback — interpreted) against a typed mapPartitions
-      // kernel computing the same 16 minhashes, at the CANON shape: short
-      // character-3-gram shingle arrays of IRI local names. The HOF form
-      // is only acceptable because this input is churn-sized; this probe
-      // is the measurement behind the Canon.scala comment saying so.
-      val rows = sys.env("MINHASH_HOF").toLong
-      val toks = spark.range(0, rows).select(
-          col("id").cast("string").as("id"),
-          split(md5(col("id").cast("string")), "").as("toks"))
-        .filter(size(col("toks")) > 0)
-        .localCheckpoint()
-      def sigChecksum(df: org.apache.spark.sql.DataFrame): Long =
-        df.select(xxhash64(col("id"), concat_ws(",", col("sig").cast("array<string>"))).as("h"))
-          .agg(bit_xor(col("h"))).head().getLong(0)
-      val nH = 16
-      def hof() = sigChecksum(graft.canon.MinHashBlocking.signatures(toks, nH))
-      def typed(): Long = {
-        import org.apache.spark.sql.Row
-        import org.apache.spark.sql.types._
-        val enc = org.apache.spark.sql.Encoders.row(StructType(Seq(
-          StructField("id", StringType), StructField("sig", ArrayType(LongType)))))
-        val out = toks.mapPartitions { it =>
-          it.map { r =>
-            val id = r.getString(0)
-            val ts = r.getSeq[String](1)
-            val sig = new Array[Long](nH)
-            var i = 0
-            while (i < nH) {
-              var m = Long.MaxValue
-              ts.foreach { t =>
-                val h = graft.sources.XXH64.hashString(t, i.toLong)
-                if (h < m) m = h
-              }
-              sig(i) = m; i += 1
-            }
-            Row(id, sig.toSeq)
-          }
-        }(enc)
-        sigChecksum(out)
-      }
-      hof(); typed() // JIT warmup
-      for (r <- 1 to 2) time(s"minhash HOF aggregate #$r")(hof())
-      for (r <- 1 to 2) time(s"minhash typed kernel  #$r")(typed())
       spark.stop(); return
     }
     if (sys.env.contains("REMAP_SCALE")) {
@@ -540,60 +410,5 @@ object Micro {
       println(s"[micro] verified rows=${verified.count()}")
       spark.stop(); return
     }
-    if (sys.env.contains("BLOOM_TREE")) {
-      // treeReduce evidence for BloomProbe.build: build time vs partition
-      // count at a fixed key volume (the flat reduce ingested one filter
-      // per partition at the driver; tree depth 2 keeps it ~flat)
-      val keys = sys.env("BLOOM_TREE").toLong
-      for (parts <- Seq(16, 64, 256)) {
-        val ds = spark.range(0, keys, 1, parts).select(xxhash64(col("id")))
-        time(s"bloom build keys=$keys parts=$parts warm") {
-          graft.functions.BloomProbe.build(ds, keys, 1L << 29)
-        }
-        time(s"bloom build keys=$keys parts=$parts") {
-          graft.functions.BloomProbe.build(ds, keys, 1L << 29)
-        }
-      }
-      spark.stop(); return
-    }
-    if (sys.env.contains("CPU_BURN")) {
-      time("cpu burn warm")(spark.range(0, 500000000L).selectExpr("bit_xor(xxhash64(id))").head())
-      time("cpu burn 1")(spark.range(0, 40000000000L).selectExpr("bit_xor(xxhash64(id))").head())
-      time("cpu burn 2")(spark.range(0, 4000000000L).selectExpr("bit_xor(xxhash64(id, id+1, id+2))").head())
-      spark.stop(); return
-    }
-    val pages = graft.sources.PageGen.snapshot(spark, n, 0)
-    time("pages.count warm1")(pages.count())
-    time("pages.count warm2")(pages.count())
-    val df = pages.toDF().cache()
-    time("pages cache fill")(df.count())
-    val surfaces = graft.extract.MentionDetector.surfaceDim(spark)
-    val mentions = graft.extract.MentionDetector.detect(df, surfaces)
-    time("mentions.count")(mentions.count())
-    val links = graft.extract.EntityLinker.link(mentions, df, surfaces)
-    time("links.count")(links.count())
-    val quads = graft.extract.EntityLinker.toQuadsAttributed(links, df)
-    time("quads.count (modular)")(quads.count())
-    val fused = graft.extract.RowwiseExtractor.pageQuads(pages.toDF())
-    time("quads.count (fused) 1")(fused.count())
-    time("quads.count (fused) 2")(fused.count())
-    val qc = quads.cache()
-    time("quads cache fill")(qc.count())
-    val iris = qc.select(col("s").as("id"))
-      .union(qc.filter(col("oKind") === 0).select(col("oLex").as("id")))
-      .filter(col("id").startsWith("http://kg.example.org/")).distinct()
-    time("iris localCheckpoint")(iris.localCheckpoint().count())
-    val cmap = time("canonicalMap")(
-      graft.canon.IriCanonicalizer.canonicalMap(spark, iris.localCheckpoint())
-        .localCheckpoint())
-    val cmapRows = cmap.count() // real size for the broadcast gate
-    time("canonicalize+count")(
-      graft.canon.IriCanonicalizer.canonicalizeAttributed(qc, cmap, cmapRows).count())
-    val out = java.nio.file.Files.createTempDirectory("micro").toString
-    time("write 32 buckets")(
-      qc.withColumn("bucket", pmod(xxhash64(col("url")), lit(32)).cast("int"))
-        .repartition(32, col("bucket"))
-        .write.mode("overwrite").partitionBy("bucket").parquet(out + "/p"))
-    spark.stop()
   }
 }

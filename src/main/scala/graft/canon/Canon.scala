@@ -2,6 +2,7 @@ package graft.canon
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Timing.timed
 
 /** Connected components over an edge list via iterative DataFrame joins —
   * alternating large-star / small-star contraction (the O(log n)-round
@@ -26,15 +27,6 @@ import org.apache.spark.sql.functions._
   */
 object ConnectedComponents {
 
-  /** Step timing, printed when GRAFT_TIMING=1 (perf triage aid). */
-  private[canon] def timed[T](label: String)(f: => T): T = {
-    val t0 = System.nanoTime()
-    val r = f
-    if (sys.env.get("GRAFT_TIMING").contains("1"))
-      println(f"[graft-timing]   canon.$label%-29s ${(System.nanoTime() - t0) / 1e9}%8.2fs")
-    r
-  }
-
   /** Below this many distinct edges, a driver-side union-find beats the
     * distributed rounds (each a shuffle + action) by seconds of fixed
     * latency. Above it, the iterative join path is the only thing that
@@ -55,14 +47,14 @@ object ConnectedComponents {
   def run(spark: SparkSession, edges: DataFrame, maxIter: Int = 25,
           smallGraphCutoff: Long = driverThreshold): DataFrame = {
     // undirected closure, self-edges dropped
-    val e0 = timed("cc.e0.checkpoint")(edges.select(col("src"), col("dst"))
+    val e0 = timed("canon.cc.e0.checkpoint")(edges.select(col("src"), col("dst"))
       .union(edges.select(col("dst").as("src"), col("src").as("dst")))
       .filter(col("src") =!= col("dst"))
       .distinct()
       .localCheckpoint())
 
     if (smallGraphCutoff > 0 && e0.count() <= smallGraphCutoff)
-      return timed("cc.driver")(runOnDriver(spark, e0))
+      return timed("canon.cc.driver")(runOnDriver(spark, e0))
 
     val vertices = e0.select(col("src").as("id")).distinct().localCheckpoint()
 
@@ -175,8 +167,9 @@ object MinHashBlocking {
       // Similarity.scala's scaladoc and the typed kernels in Dedup). That
       // is acceptable HERE ONLY because this path's input is the
       // churn-sized canon IRI shingle set (thousands of short arrays per
-      // batch), never a corpus-sized column — Micro's MINHASH_HOF probe
-      // pins the cost; do NOT copy this pattern onto document text.
+      // batch), never a corpus-sized column — measured 2.1 s vs the typed
+      // kernel's 0.8 s at 200k rows (BENCH.md); do NOT copy this pattern
+      // onto document text.
       aggregate(
         transform(toks, t => xxhash64(t, lit(i))),
         lit(Long.MaxValue),
@@ -266,7 +259,7 @@ object IriCanonicalizer {
                    jaccardThreshold: Double = 0.6): DataFrame = {
     // size probe: limit(L+1) short-circuits on large domains, and under the
     // gate the probe rows ARE the whole domain (no second evaluation)
-    val probe = ConnectedComponents.timed("iris.probe")(
+    val probe = timed("canon.iris.probe")(
       iris.select(col("id")).limit(driverDomainLimit + 1).collect())
     if (probe.length <= driverDomainLimit) {
       val ids = probe.map(_.getString(0)).toSeq.distinct
@@ -284,7 +277,7 @@ object IriCanonicalizer {
     * the driver mirror is spec-asserted EQUAL against it). */
   private[canon] def canonicalMapDistributed(spark: SparkSession, iris: DataFrame,
                                              jaccardThreshold: Double): DataFrame = {
-    val irisC = ConnectedComponents.timed("iris.checkpoint")(iris.localCheckpoint())
+    val irisC = timed("canon.iris.checkpoint")(iris.localCheckpoint())
     mapFromEdges(spark, irisC, verifiedPairs(irisC, jaccardThreshold))
   }
 
@@ -459,41 +452,43 @@ object IriCanonicalizer {
   def extendChangedGivenFresh(spark: SparkSession, oldMap: DataFrame,
                               fresh: DataFrame,
                               jaccardThreshold: Double = 0.6,
-                              storedSigs: Option[DataFrame] = None): DataFrame = {
+                              storedSigs: Option[DataFrame] = None,
+                              sigSource: String = "stored signatures"): DataFrame = {
     // Pair generation, two shapes:
     //  - storedSigs = Some(id, sig): the accumulated side's signatures are
     //    PERSISTED (canon store `sig` column) — per-batch compute is
     //    O(fresh + candidates) and the stored side is one narrow columnar
     //    scan, never a shingle/signature pass over the accumulated domain
-    //    (see verifiedPairsStored; CanonSpec asserts equality).
-    //  - None: recompute over the whole domain (pre-sig stores, spec
-    //    callers). domain = map ids ∪ fresh — disjoint unions of
-    //    already-distinct sets, so no dedup exchange, and consumed exactly
-    //    once (verifiedPairs checkpoints its own signature frame; the
-    //    typed verification reads no domain-side toks), so no checkpoint
-    //    here either.
-    val newEdges = ConnectedComponents.timed("ext.newEdges")((storedSigs match {
-      case Some(ss) => verifiedPairsStored(fresh, ss, jaccardThreshold)
+    //    (see verifiedPairsStored; CanonSpec asserts equality). `sigSource`
+    //    names them in the length-guard error.
+    //  - None: recompute over the whole domain (the reference formulation
+    //    CanonSpec checks the stored path against). domain = map ids ∪
+    //    fresh — disjoint unions of already-distinct sets, so no dedup
+    //    exchange, and consumed exactly once (verifiedPairs checkpoints its
+    //    own signature frame; the typed verification reads no domain-side
+    //    toks), so no checkpoint here either.
+    val newEdges = timed("canon.ext.newEdges")((storedSigs match {
+      case Some(ss) => verifiedPairsStored(fresh, ss, jaccardThreshold, sigSource = sigSource)
       case None =>
         val ids = oldMap.select(col("id")).union(fresh.select(col("id")))
         verifiedPairs(ids, jaccardThreshold, leftIds = Some(fresh))
     }).localCheckpoint())
     val endpoints = newEdges.select(col("src").as("id"))
       .union(newEdges.select(col("dst").as("id"))).distinct()
-    val touchedReps = ConnectedComponents.timed("ext.touchedReps")(oldMap
+    val touchedReps = timed("canon.ext.touchedReps")(oldMap
       .join(endpoints, Seq("id"), "left_semi")
       .select(col("canonical").as("rep")).distinct()
       .localCheckpoint())
     val touchedOld = oldMap
       .join(touchedReps.withColumnRenamed("rep", "canonical"), Seq("canonical"), "left_semi")
-    val touchedIds = ConnectedComponents.timed("ext.touchedIds")(touchedOld.select(col("id"))
+    val touchedIds = timed("canon.ext.touchedIds")(touchedOld.select(col("id"))
       .union(touchedOld.select(col("canonical").as("id")))
       .union(fresh.select(col("id")))
       .distinct().localCheckpoint())
     val edges = newEdges.unionByName(
       touchedOld.filter(col("id") =!= col("canonical"))
         .select(col("id").as("src"), col("canonical").as("dst")))
-    ConnectedComponents.timed("ext.mapFromEdges")(mapFromEdges(spark, touchedIds, edges))
+    timed("canon.ext.mapFromEdges")(mapFromEdges(spark, touchedIds, edges))
   }
 
   /** LSH geometry shared by every canon pair path (and the driver mirror's
@@ -625,6 +620,16 @@ object IriCanonicalizer {
     verifyPairsTyped(raw, jaccardThreshold).distinct()
   }
 
+  /** Fresh-id count at or below which the stored band scan is pre-filtered
+    * by an EXPLICITLY broadcast semi join on the fresh band keys: 8 keys ×
+    * 16 B × hashed-relation overhead ≈ low tens of MB at the gate — the
+    * same byte-reasoned discipline as the pipeline's urlBroadcastKeyLimit.
+    * Above it (a bootstrap-sized increment) the hint would force a
+    * multi-hundred-MB broadcast past Spark's own estimator, so the stored
+    * side joins UNFILTERED — the shuffle the recompute path always paid,
+    * still minus its domain signature pass. */
+  val freshKeyBroadcastLimit: Long = 200000L
+
   /** [[verifiedPairs]](ids = stored ∪ fresh, leftIds = fresh) for the
     * incremental case where the accumulated side's signatures are
     * PERSISTED: candidate pairs touching a fresh id, with ZERO
@@ -645,27 +650,23 @@ object IriCanonicalizer {
     * scan of the store pre-filtered BEFORE the pair exchange + O(candidate
     * pairs) verification. Nothing scales with the accumulated domain
     * except the narrow scan's IO. */
-  /** Fresh-id count at or below which the stored band scan is pre-filtered
-    * by an EXPLICITLY broadcast semi join on the fresh band keys: 8 keys ×
-    * 16 B × hashed-relation overhead ≈ low tens of MB at the gate — the
-    * same byte-reasoned discipline as the pipeline's urlBroadcastKeyLimit.
-    * Above it (a bootstrap-sized increment) the hint would force a
-    * multi-hundred-MB broadcast past Spark's own estimator, so the stored
-    * side joins UNFILTERED — the shuffle the recompute path always paid,
-    * still minus its domain signature pass. */
-  val freshKeyBroadcastLimit: Long = 200000L
-
   def verifiedPairsStored(fresh: DataFrame, storedSigs: DataFrame,
                           jaccardThreshold: Double,
-                          freshBroadcastLimit: Long = freshKeyBroadcastLimit): DataFrame = {
+                          freshBroadcastLimit: Long = freshKeyBroadcastLimit,
+                          sigSource: String = "stored signatures"): DataFrame = {
     val freshSigs = withSignatures(fresh.select("id"))
       .localCheckpoint() // batch-sized; feeds both join sides
-    def banded(sigs: DataFrame) = sigs.select(col("id"),
-      posexplode(MinHashBlocking.bandCol(col("sig"), sigBands, sigRowsPerBand))
-        .as(Seq("band", "bucket")))
-    val freshBanded = banded(freshSigs).localCheckpoint()
+    def banded(sig: org.apache.spark.sql.Column) =
+      posexplode(MinHashBlocking.bandCol(sig, sigBands, sigRowsPerBand)).as(Seq("band", "bucket"))
+    val freshBanded = freshSigs.select(col("id"), banded(col("sig"))).localCheckpoint()
     val freshKeys = freshBanded.select("band", "bucket").distinct()
-    val storedBanded = banded(storedSigs)
+    // A stored `sig` shorter than sigHashes would band to null slices that
+    // concat_ws silently skips — wrong buckets, missed pairs. Checked in
+    // the banding projection itself, so the guard costs no extra job.
+    val storedBanded = storedSigs.select(col("id"), banded(
+      when(size(col("sig")) === sigHashes, col("sig")).otherwise(raise_error(concat(
+        lit(s"$sigSource: sig of id '"), col("id"), lit("' has "),
+        size(col("sig")).cast("string"), lit(s" elements, expected $sigHashes"))))))
     val storedPruned =
       if (freshSigs.count() <= freshBroadcastLimit)
         storedBanded.join(broadcast(freshKeys), Seq("band", "bucket"), "left_semi")

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import java.nio.charset.StandardCharsets
+import graft.Timing.timed
 
 /** S7/W2 — the resourcesync-generator re-expressed: package committed patch
   * files into fixed-size zip batches with per-resource checksums, and publish
@@ -102,14 +103,6 @@ object ZipPublisher {
 
   private def fs(spark: SparkSession, p: String): FileSystem =
     new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def timed[T](label: String)(f: => T): T = {
-    val t0 = System.nanoTime()
-    val r = f
-    if (sys.env.get("GRAFT_TIMING").contains("1"))
-      println(f"[graft-timing] publish.$label%-24s ${(System.nanoTime() - t0) / 1e9}%8.2fs")
-    r
-  }
 
   /** Run independent per-graph filesystem work on a bounded thread pool
     * (Hadoop FileSystem handles are thread-safe; each task touches only
@@ -250,7 +243,7 @@ object ZipPublisher {
     // inventory minus already-definitively-published resources; when the
     // pipeline's graph-folder index is supplied, the fan-out is driven by it
     // (syncdirector.py:107-115 walks subdirs only when FILE_INDEX exists)
-    val invAll = timed("inventory")(ManifestBuilder.build(spark, patchDir, filesPerZip))
+    val invAll = timed("publish.inventory")(ManifestBuilder.build(spark, patchDir, filesPerZip))
       .drop("batch", "is_complete")
     val inv0 = graphIndex match {
       case None => invAll
@@ -313,13 +306,13 @@ object ZipPublisher {
         windows.flatten
       }
       .toDF()
-    val windowedC = timed("windowedInventory") {
+    val windowedC = timed("publish.windowedInventory") {
       windowed0.localCheckpoint() // consumed 3x below (end check, naming, zip build)
     }
 
     // existing sink state: tiny per-graph maps (one entry per graph)
-    val prevEnd: Map[String, (Int, Set[String])] = timed("scanEndParts")(existingEndParts(spark, sinkDir))
-    val defIdx: Map[String, Int] = timed("scanDefIdx")(existingMaxIndex(spark, sinkDir, "part_def_"))
+    val prevEnd: Map[String, (Int, Set[String])] = timed("publish.scanEndParts")(existingEndParts(spark, sinkDir))
+    val defIdx: Map[String, Int] = timed("publish.scanDefIdx")(existingMaxIndex(spark, sinkDir, "part_def_"))
     val endIdxMax: Map[String, Int] = existingMaxIndex(spark, sinkDir, "part_end_")
 
     // J3: per-graph end-part membership as (basename, md5) pairs — a member
@@ -440,14 +433,14 @@ object ZipPublisher {
     // and including the state append deletes every artifact this run
     // created (def and end) and re-raises.
     val built = try {
-      val rows = timed("zipBuild")(buildJob.collect())
+      val rows = timed("publish.zipBuild")(buildJob.collect())
       if (rows.isEmpty) return Seq.empty
       onBuiltForTests(rows.map { case (g, name, complete, n, len, md5v, lastmod) =>
         ZipInfo(g, name, complete, n, len, md5v, lastmod) }.toSeq)
       // published-state bookkeeping: complete-zip members, written
       // distributed; compacted-append layout bounds the state's file count
       // across thousands of publish runs, sized ~4M member rows per file
-      timed("stateAppend")(graft.state.CompactedAppendTable.append(spark, stateDir,
+      timed("publish.stateAppend")(graft.state.CompactedAppendTable.append(spark, stateDir,
         assigned.filter(col("is_complete"))
           .select(col("resource"), col("zipName").as("zip")),
         targetFiles = rowsTotal => (rowsTotal / 4000000L + 1L).toInt))
@@ -470,7 +463,7 @@ object ZipPublisher {
     // unchanged — this pass runs after the state commit (the crash tests'
     // post-state window still sees zero metadata) and before the dump-xml
     // regeneration. Only a count returns.
-    timed("zipSidecars") {
+    timed("publish.zipSidecars") {
       val sidecarJob = assigned
         .select("graph_b64", "zipName", "is_complete", "resource", "md5", "length", "lastmod")
         .repartition(col("graph_b64"), col("zipName"))
@@ -516,7 +509,7 @@ object ZipPublisher {
     // run on a small thread pool: serially this driver loop is O(graphs)
     // of filesystem round-trips, the publish tail's bottleneck once the
     // graph count is large.
-    timed("graphMetadata")(forEachParallel(builtInfos.groupBy(_.graph_b64).toSeq, metadataThreads) { case (g, zs) =>
+    timed("publish.graphMetadata")(forEachParallel(builtInfos.groupBy(_.graph_b64).toSeq, metadataThreads) { case (g, zs) =>
       val gDir = new Path(sinkDir, g)
       val gUrl = s"$publishUrl$g/"
       // (per-zip sidecars were already written by the distributed pass
@@ -554,7 +547,7 @@ object ZipPublisher {
     // superseded part_end zips/sidecars and repair any dump xml whose end
     // entries disagree with the on-disk current end — the do_publish tail,
     // hardened against crashes in past runs' metadata windows.
-    timed("sweepStaleEnds")(sweepStaleEnds(f, sinkDir, publishUrl, summaries.toSeq, nowIso, maxItemsInList, metadataThreads))
+    timed("publish.sweepStaleEnds")(sweepStaleEnds(f, sinkDir, publishUrl, summaries.toSeq, nowIso, maxItemsInList, metadataThreads))
 
     // top-level source description over every graph dir with a capability list
     val graphs = f.listStatus(new Path(sinkDir)).filter(_.isDirectory)

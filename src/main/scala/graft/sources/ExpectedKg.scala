@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.extract.MentionDetector
+import graft.extract.Vocab
 import graft.model.{Page, TermKind}
 
 /** Closed-form EXPECTED quad set for a bootstrap dump over the deterministic
@@ -24,8 +24,8 @@ object ExpectedKg {
   private val bySurface = PageGen.dictionary
     .flatMap(e => e.surfaces.map(s => s -> e)).groupBy(_._1)
 
-  /** EntityLinker/RowwiseExtractor argmax contract: max(ctx + prior),
-    * ties -> entity IRI ascending. */
+  /** TypedExtractor's argmax contract: max(ctx + prior), ties -> entity
+    * IRI ascending. */
   private def linkOf(tok: String, distinctToks: Set[String]): Option[PageGen.DictEntry] =
     bySurface.get(tok).map { cands =>
       cands.map(_._2).map { e =>
@@ -44,11 +44,11 @@ object ExpectedKg {
       linkOf(tok, distinctToks).map(e => (pos, e))
     }
     val mentionQ = links.map { case (_, e) =>
-      ExpectedQuad("+", p.url, MentionDetector.mentionsPred, siteIri(e.iri),
+      ExpectedQuad("+", p.url, Vocab.mentionsPred, siteIri(e.iri),
         TermKind.Iri, "", "", g)
     }
     val typeQ = links.map { case (_, e) =>
-      ExpectedQuad("+", siteIri(e.iri), MentionDetector.typePred,
+      ExpectedQuad("+", siteIri(e.iri), Vocab.typePred,
         "http://kg.example.org/class/" + e.etype, TermKind.Iri, "", "", g)
     }
     val posQ = links.map { case (pos, _) =>
@@ -56,16 +56,16 @@ object ExpectedKg {
       val h = XXH64.hashInt(pos, XXH64.hashString(p.url, 42L))
       val a = if (h < 0) -h else h // Spark abs(); Long.MinValue never hit here
       ExpectedQuad("+", "_:m" + java.lang.Long.toHexString(a).toUpperCase,
-        MentionDetector.posPred, pos.toString, TermKind.Literal,
-        MentionDetector.XsdInteger, "", g)
+        Vocab.posPred, pos.toString, TermKind.Literal,
+        Vocab.XsdInteger, "", g)
     }
     val fmt = new java.text.SimpleDateFormat("yyyy-MM-dd'T'HH:mm:ss'Z'")
     fmt.setTimeZone(java.util.TimeZone.getTimeZone("UTC"))
     val metaQ = Set(
-      ExpectedQuad("+", p.url, MentionDetector.langPred, p.lang,
+      ExpectedQuad("+", p.url, Vocab.langPred, p.lang,
         TermKind.Literal, "", p.lang, g),
-      ExpectedQuad("+", p.url, MentionDetector.crawledPred, fmt.format(p.warc_ts),
-        TermKind.Literal, MentionDetector.XsdDateTime, "", g))
+      ExpectedQuad("+", p.url, Vocab.crawledPred, fmt.format(p.warc_ts),
+        TermKind.Literal, Vocab.XsdDateTime, "", g))
     mentionQ.toSet ++ typeQ.toSet ++ posQ.toSet ++ metaQ
   }
 

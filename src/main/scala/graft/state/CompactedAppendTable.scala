@@ -28,9 +28,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    resolving this way is equivalent content (the compaction is a
   *    full rewrite of the same rows).
   *
-  * Legacy layout: a root dir holding flat `*.parquet` files (the
-  * pre-generation `mode("append")` layout) is migrated into `gen_0/` on
-  * first touch, so state written by earlier builds stays visible.
+  * A root dir holding flat `*.parquet` files (a plain `mode("append")`
+  * layout, which this table never writes) fails loudly on resolution
+  * instead of reading as empty.
   */
 object CompactedAppendTable {
 
@@ -74,30 +74,20 @@ object CompactedAppendTable {
       .map(p => genIndex(p.getName)).toSeq
   }
 
-  /** One-time migration of the legacy flat layout (root-level `*.parquet`
-    * from a plain `mode("append")` writer) into `gen_0/`, so pre-generation
-    * state dirs stay visible instead of silently reading as empty. Per-file
-    * renames; a crash mid-loop leaves the remaining flat files at root and
-    * the next touch finishes the move. */
-  private def migrateLegacy(f: FileSystem, root: String): Unit = {
-    val rp = new Path(root)
-    if (!f.exists(rp)) return
-    val flat = f.listStatus(rp).filter(s => s.isFile &&
-      (s.getPath.getName.endsWith(".parquet") || s.getPath.getName == "_SUCCESS"))
-    if (!flat.exists(_.getPath.getName.endsWith(".parquet"))) return
-    val g0 = new Path(root, "gen_0")
-    f.mkdirs(g0)
-    flat.foreach(s => f.rename(s.getPath, new Path(g0, s.getPath.getName)))
-  }
-
   /** Current generation data dir. Resolution order: pointer file; else the
-    * newest committed generation; else "gen_0" (empty table). */
+    * newest committed generation; else "gen_0" (empty table) — unless the
+    * root holds flat `*.parquet` files, a layout this table never writes. */
   def currentDir(spark: SparkSession, root: String): String = {
     val f = fs(spark, root)
-    migrateLegacy(f, root)
     val gen = readPointer(f, root).getOrElse {
-      committedGens(f, root).sorted.lastOption
-        .map(k => s"gen_$k").getOrElse("gen_0")
+      committedGens(f, root).sorted.lastOption.map(k => s"gen_$k").getOrElse {
+        val rp = new Path(root)
+        if (f.exists(rp) && f.listStatus(rp).exists(s =>
+              s.isFile && s.getPath.getName.endsWith(".parquet")))
+          sys.error(s"append table $root holds root-level *.parquet files (a flat " +
+            "mode(\"append\") layout); this table reads only gen_<k>/ generation dirs")
+        "gen_0"
+      }
     }
     s"$root/$gen"
   }

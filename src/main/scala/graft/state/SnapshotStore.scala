@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.charset.StandardCharsets
+import graft.Timing.timed
 
 /** Iceberg-lite bucketed table with atomic snapshot commits, copy-on-write
   * full/bucket rewrites AND merge-on-read delta commits.
@@ -89,15 +90,6 @@ final class SnapshotStore(spark: SparkSession, root: String, val numBuckets: Int
 
   private val hconf = spark.sparkContext.hadoopConfiguration
   private def fs: FileSystem = new Path(root).getFileSystem(hconf)
-
-  /** Step timing, printed when GRAFT_TIMING=1 (perf triage aid). */
-  private def timed[T](label: String)(f: => T): T = {
-    val t0 = System.nanoTime()
-    val r = f
-    if (sys.env.get("GRAFT_TIMING").contains("1"))
-      println(f"[graft-timing]   store.$label%-29s ${(System.nanoTime() - t0) / 1e9}%8.2fs")
-    r
-  }
 
   // --- single-writer lease (guard rail, not a distributed lock) ------------
 
@@ -233,8 +225,8 @@ final class SnapshotStore(spark: SparkSession, root: String, val numBuckets: Int
 
   /** Manifest: one `bucket<TAB>path` line per base bucket, plus zero or
     * more ordered delta lines — `D<TAB>tag<TAB>dir<TAB>scope` (scope `*`
-    * = all buckets, else comma-separated bucket ids). The legacy 2-field
-    * form `D<TAB>snapId` (dir derived from the id, unscoped) still reads. */
+    * = all buckets, else comma-separated bucket ids). Any other delta line
+    * shape fails the read, naming the manifest. */
   private def readManifest(id: Long): (Map[Int, String], Seq[DeltaRef]) = {
     val in = fs.open(manifestPath(id))
     val text = try new String(org.apache.commons.io.IOUtils.toByteArray(in),
@@ -248,17 +240,14 @@ final class SnapshotStore(spark: SparkSession, root: String, val numBuckets: Int
       // so a 4-field delta line with an empty scope would silently parse
       // as the 3-field shape (see the write-side require in manifestText)
       l.split("\t", -1) match {
-        case Array(_, t) =>
-          val tag = t.trim.toLong
-          DeltaRef(tag, s"$root/${f"snap_$tag%014d"}", None)
         case Array(_, t, dir, scope) =>
           if (scope.trim.isEmpty)
-            sys.error(s"bad manifest delta line (empty scope): $l")
+            sys.error(s"bad manifest delta line (empty scope) in ${manifestPath(id)}: $l")
           DeltaRef(t.trim.toLong, dir,
             if (scope.trim == "*") None
             else Some(scope.split(",").iterator.map(_.trim).filter(_.nonEmpty)
               .map(_.toInt).toSet))
-        case other => sys.error(s"bad manifest delta line: ${other.mkString("\t")}")
+        case _ => sys.error(s"bad manifest delta line in ${manifestPath(id)}: $l")
       }
     }.toSeq
     (base, deltas)
@@ -307,9 +296,9 @@ final class SnapshotStore(spark: SparkSession, root: String, val numBuckets: Int
                 assumePartitioned: Boolean = false): Unit = withLease {
     val dataDir = new Path(root, f"snap_$id%014d").toString
     val placed = if (assumePartitioned) df else df.repartition(numBuckets, col("bucket"))
-    timed("full.write")(placed
+    timed("store.full.write")(placed
       .write.mode("overwrite").partitionBy("bucket").parquet(dataDir))
-    if (!deferSidecar) timed("full.sidecar")(writeTermSidecar(dataDir, dataDir))
+    if (!deferSidecar) timed("store.full.sidecar")(writeTermSidecar(dataDir, dataDir))
     val base = (0 until numBuckets).map(b => b -> s"$dataDir/bucket=$b").toMap
     writeAtomic(manifestPath(id), manifestText(base, Seq.empty))
   }
@@ -323,7 +312,7 @@ final class SnapshotStore(spark: SparkSession, root: String, val numBuckets: Int
     val (base, _) = readManifest(id)
     val dirs: Set[String] = base.values.filter(_.nonEmpty)
       .map(p => new Path(p).getParent.toString).toSet
-    dirs.foreach(dir => timed("full.sidecar")(writeTermSidecar(dir, dir)))
+    dirs.foreach(dir => timed("store.full.sidecar")(writeTermSidecar(dir, dir)))
   } }
 
   /** Stage a MERGE-ON-READ delta commit: O(batch) writes regardless of
@@ -362,22 +351,22 @@ final class SnapshotStore(spark: SparkSession, root: String, val numBuckets: Int
     val snapDir = new Path(root, f"snap_$id%014d").toString
     // one exchange keyed by bucket -> ~one file per bucket per delta
     // (additions are O(batch); a fixed fan-out would write tiny files)
-    timed("delta.add")(additions.repartition(numBuckets, col("bucket"))
+    timed("store.delta.add")(additions.repartition(numBuckets, col("bucket"))
       .write.mode("overwrite").partitionBy("bucket").parquet(s"$snapDir/add"))
     // same bucket-keyed exchange as additions: ~one file per bucket, and
     // a 10^9-key tombstone set never funnels through one task (the
     // earlier repartition(1) was a single-task write — fine for a bench
     // batch, a bottleneck at target scale)
     val tombRows = tombstones.select((deleteKeys :+ "bucket").map(col): _*)
-    timed("delta.tomb")((if (tombstonesDistinct) tombRows else tombRows.distinct())
+    timed("store.delta.tomb")((if (tombstonesDistinct) tombRows else tombRows.distinct())
       .repartition(numBuckets, col("bucket"))
       .write.mode("overwrite").partitionBy("bucket").parquet(s"$snapDir/tomb"))
-    timed("delta.sidecar")(writeTermSidecar(s"$snapDir/add", snapDir))
+    timed("store.delta.sidecar")(writeTermSidecar(s"$snapDir/add", snapDir))
     val chain = deltas :+ DeltaRef(id, snapDir, None)
     if (chain.size <= maxDeltas)
       writeAtomic(manifestPath(id), manifestText(base, chain))
     else
-      timed("delta.fold")(foldChain(base, chain, id))
+      timed("store.delta.fold")(foldChain(base, chain, id))
   }
 
   /** Cap on distinct snap dirs the base may fragment across: each distinct
@@ -730,20 +719,25 @@ final class SnapshotStore(spark: SparkSession, root: String, val numBuckets: Int
     val tombs = deltas.flatMap { d =>
       loadDelta(s"${d.dir}/tomb", buckets, d.scope).map(df => d.tag -> df)
     }
-    val tagged = (baseDf.map(df => -1L -> df).toSeq ++ adds).map { case (tag, df) =>
-      df.withColumn("_wtag", lit(tag))
+    val gens = baseDf.map(df => -1L -> df).toSeq ++ adds
+    if (gens.isEmpty) return None
+    // Every generation of the chain must carry the same columns: this store
+    // writes one schema per table, so a mismatch is foreign or damaged
+    // state. Fail naming the generation instead of folding to a subset
+    // (which would silently drop a column from every row). Driver-side:
+    // the schemas are already resolved, no job runs.
+    def genName(tag: Long) = if (tag < 0) "base" else s"delta snapshot tag $tag"
+    val (firstTag, firstDf) = gens.head
+    gens.tail.foreach { case (tag, df) =>
+      val missing = firstDf.columns.toSet -- df.columns
+      val extra = df.columns.toSet -- firstDf.columns
+      if (missing.nonEmpty || extra.nonEmpty)
+        sys.error(s"store $root: ${genName(tag)} differs in columns from the " +
+          s"${genName(firstTag)}: missing [${missing.toSeq.sorted.mkString(", ")}], " +
+          s"extra [${extra.toSeq.sorted.mkString(", ")}]")
     }
-    if (tagged.isEmpty) return None
-    // COMMON-schema projection (head's column order): a store whose chain
-    // mixes schema generations — a base written before a column existed
-    // under deltas that carry it, or the reverse after a binary rollback —
-    // folds to the columns EVERY generation has instead of crashing on the
-    // head's superset (readers of evolved columns treat absence as "not
-    // available" and fall back; the canon `sig` column is the live case).
-    // Key columns stay loud: deleteKeys/bucket are contractual in every
-    // generation, so a genuinely malformed delta still fails below.
-    val cols = tagged.map(_.columns.toSeq).reduce((a, b) => a.filter(b.contains))
-    val rows = tagged.map(_.select(cols.map(col): _*)).reduce(_ unionByName _)
+    val tagged = gens.map { case (tag, df) => df.withColumn("_wtag", lit(tag)) }
+    val rows = tagged.reduce(_ unionByName _)
     if (tombs.isEmpty) return Some(rows.drop("_wtag"))
     val tombMax = tombs.map { case (tag, df) =>
       df.select(deleteKeys.map(col): _*).withColumn("_ttag", lit(tag))

@@ -7,6 +7,7 @@ import graft.model.Page
 import graft.canon.IriCanonicalizer
 import graft.plans.{PatchWriter, QuadDiff}
 import graft.state.SnapshotStore
+import graft.Timing.timed
 
 /** The end-to-end KG changelog pipeline — the Spark re-expression of the
   * reference's three chained components (quad-logger -> graph-splitter ->
@@ -202,11 +203,13 @@ final class QuadLogPipeline(
         // evaluated when the batch brings fresh ids — it routes
         // extendChangedGivenFresh through verifiedPairsStored, so no
         // shingle/signature pass over the accumulated domain ever runs
-        // per batch. Stores written before the column existed fall back
-        // to the recompute path (None).
-        val storedSigs: Option[DataFrame] =
-          if (full.columns.contains("sig")) Some(full.select("id", "sig")) else None
-        lastCanonHasSig = storedSigs.isDefined
+        // per batch. A store without the column was not written by this
+        // pipeline: refuse it rather than guess.
+        if (!full.columns.contains("sig"))
+          sys.error(s"canon store $root/canon has no `sig` column " +
+            s"(columns: ${full.columns.mkString(", ")}); this pipeline writes " +
+            "it on every canon commit — re-run bootstrap to rebuild the store")
+        val storedSigs = full.select("id", "sig")
         // Small stores: checkpoint the folded map once — the domain union,
         // the touched-cluster splits and the remap join all scan it, and
         // each lazy scan re-runs the merge-on-read fold. Past the byte
@@ -240,7 +243,7 @@ final class QuadLogPipeline(
         val changed = timed("canonicalMap")(
           (if (fresh.isEmpty) o.limit(0)
            else IriCanonicalizer.extendChangedGivenFresh(spark, o, fresh,
-             storedSigs = storedSigs))
+             storedSigs = Some(storedSigs), sigSource = s"canon store $root/canon"))
             .localCheckpoint())
         // rewrite view: pruned old rows minus the ones `changed` replaces,
         // plus the changed rows the batch can actually reference
@@ -273,19 +276,10 @@ final class QuadLogPipeline(
     * store) — observable plan-shape evidence for specs/benchmarks. */
   @volatile private[graft] var lastCanonBuckets: Option[Seq[Int]] = None
 
-  /** Whether the last canon-map read carried persisted signatures. Gates
-    * the incremental delta's sig attachment: a pre-sig store (written by
-    * an older binary) stays consistently sig-less — the read-side fold
-    * would drop a mixed-in column anyway (common-schema projection), so
-    * writing it would only burn kernel time and delta bytes forever.
-    * Migration is the next bootstrap/epoch reset, which always signs. */
-  @volatile private var lastCanonHasSig: Boolean = true
-
   /** Exact per-page contributions: quads tagged with the url that supports
     * them (a quad may appear under many urls; support = distinct urls).
-    * Uses the fused shuffle-free extractor (see RowwiseExtractor scaladoc);
-    * the modular MentionDetector/EntityLinker path computes identical quads
-    * (verified by ExtractorEquivalenceSpec). Pure — does not advance state. */
+    * Uses the shuffle-free TypedExtractor (checked against the ExpectedKg
+    * oracle by ExtractorEquivalenceSpec). Pure — does not advance state. */
   def pageContributions(pages: Dataset[Page]): DataFrame = {
     // NOT cached: extraction is a narrow, CPU-bound, re-runnable pass; RAM-
     // caching 10^6+ deserialized rows costs more (alloc + GC bandwidth) than
@@ -482,8 +476,7 @@ final class QuadLogPipeline(
         // the old stageFull rewrote the whole accumulated map per batch.
         timed("incr.canonStage")(
           canon.stageDelta(
-            additions = (if (lastCanonHasSig)
-                IriCanonicalizer.withSignatures(canonChanged) else canonChanged)
+            additions = IriCanonicalizer.withSignatures(canonChanged)
               .withColumn("bucket", canon.bucketCol(col("id"))),
             tombstones = canonChanged.select(col("id"))
               .withColumn("bucket", canon.bucketCol(col("id"))),
@@ -777,15 +770,6 @@ final class QuadLogPipeline(
       java.util.concurrent.Executors.newFixedThreadPool(4, r => {
         val t = new Thread(r, "graft-sink"); t.setDaemon(true); t
       }))
-
-  /** Step timing, printed when GRAFT_TIMING=1 (perf triage aid). */
-  private def timed[T](label: String)(f: => T): T = {
-    val t0 = System.nanoTime()
-    val r = f
-    if (sys.env.get("GRAFT_TIMING").contains("1"))
-      println(f"[graft-timing] $label%-32s ${(System.nanoTime() - t0) / 1e9}%8.2fs")
-    r
-  }
 
   /** Quad-identity bucket key: the columns themselves — bucketCol hashes
     * them variadically (xxhash64(s,p,...)), never a concatenated string. */

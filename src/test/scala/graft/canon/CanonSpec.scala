@@ -252,6 +252,21 @@ class CanonicalizerSpec extends GraftSpec {
     assert(overGate == underGate && overGate.nonEmpty)
   }
 
+  test("verifiedPairsStored refuses a short stored sig, naming its source") {
+    // a 3-element sig would band to null slices that concat_ws skips —
+    // silently wrong buckets; the banding projection must fail instead
+    val d = graft.sources.PageGen.dictionary
+    val storedSigs = Seq((d.head.iri, Seq(1L, 2L, 3L))).toDF("id", "sig")
+    val fresh = Seq(graft.sources.PageGen.aliasIri(d.head.iri)).toDF("id")
+    val err = intercept[Exception](IriCanonicalizer
+      .verifiedPairsStored(fresh, storedSigs, 0.6, sigSource = "canon store /x/canon")
+      .collect())
+    val msgs = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .map(e => String.valueOf(e.getMessage)).mkString("\n")
+    assert(msgs.contains("canon store /x/canon") && msgs.contains("has 3 elements, expected 16"),
+      msgs)
+  }
+
   test("canonicalize rewrites subject and IRI-object but not literals") {
     val cmap = Seq(("http://kg.example.org/alt/X", "http://kg.example.org/entity/X"))
       .toDF("id", "canonical")

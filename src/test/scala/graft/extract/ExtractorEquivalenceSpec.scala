@@ -1,45 +1,32 @@
 package graft.extract
 
 import graft.GraftSpec
-import graft.sources.PageGen
+import graft.sources.{ExpectedKg, PageGen}
 import org.apache.spark.sql.functions._
 
-/** All three extraction implementations must produce EXACTLY the same
-  * quads: the modular typed path (MentionDetector -> EntityLinker), the
-  * fused Column form (RowwiseExtractor), and the hot-path typed flatMap
-  * (TypedExtractor) — same detection, same argmax tie-breaks, same
-  * alias-site namespace, same bnode ids, same per-page dedup. */
+/** The pipeline's extractor (TypedExtractor) must produce EXACTLY the quads
+  * of the independent plain-Scala oracle (ExpectedKg.pageQuads), page by
+  * page: same detection, same argmax tie-breaks, same alias-site namespace,
+  * same bnode ids, same per-page dedup. */
 class ExtractorEquivalenceSpec extends GraftSpec {
   import spark.implicits._
 
   private val cols = Seq("url", "s", "p", "oLex", "oKind", "oDtype", "oLang", "g")
-  private def quadSet(df: org.apache.spark.sql.DataFrame) =
-    df.select(cols.map(col): _*)
+
+  test("TypedExtractor == ExpectedKg, per url") {
+    val pages = PageGen.snapshot(spark, 250, 0).cache()
+    val typed = TypedExtractor.pageQuads(pages.toDF())
+      .select(cols.map(col): _*)
       .as[(String, String, String, String, Int, String, String, String)]
       .collect().toSet
-
-  test("rowwise fused extractor == modular typed path, quad for quad") {
-    val pages = PageGen.snapshot(spark, 250, 0).toDF().cache()
-    val surfaces = MentionDetector.surfaceDim(spark)
-    val mentions = MentionDetector.detect(pages, surfaces)
-    val links = EntityLinker.link(mentions, pages, surfaces)
-    val m = quadSet(EntityLinker.toQuadsAttributed(links, pages))
-    val f = quadSet(RowwiseExtractor.pageQuads(pages))
-    val onlyM = m diff f
-    val onlyF = f diff m
-    assert(onlyM.isEmpty && onlyF.isEmpty,
-      s"onlyModular=${onlyM.take(3)} onlyFused=${onlyF.take(3)}")
-    pages.unpersist()
-  }
-
-  test("typed flatMap extractor (hot path) == rowwise fused extractor") {
-    val pages = PageGen.snapshot(spark, 250, 0).toDF().cache()
-    val f = quadSet(RowwiseExtractor.pageQuads(pages))
-    val t = quadSet(TypedExtractor.pageQuads(pages))
-    val onlyF = f diff t
-    val onlyT = t diff f
-    assert(onlyF.isEmpty && onlyT.isEmpty,
-      s"onlyFused=${onlyF.take(3)} onlyTyped=${onlyT.take(3)}")
+    val oracle = pages.collect().toSeq.flatMap { p =>
+      ExpectedKg.pageQuads(p).map(q => (p.url, q.s, q.p, q.oLex, q.oKind, q.oDtype, q.oLang, q.g))
+    }.toSet
+    val onlyTyped = typed diff oracle
+    val onlyOracle = oracle diff typed
+    assert(onlyTyped.isEmpty && onlyOracle.isEmpty,
+      s"onlyTyped=${onlyTyped.take(3)} onlyOracle=${onlyOracle.take(3)}")
+    assert(typed.map(_._1).size == pages.count(), "every page contributes quads")
     pages.unpersist()
   }
 }

@@ -29,7 +29,7 @@ class PRSpec extends GraftSpec {
           val ctx = e.context.count(distinctToks.contains)
           (ctx + 1.0 / e.surfaces.size, e)
         }
-        // max score, tie-break entity IRI ascending (EntityLinker contract)
+        // max score, tie-break entity IRI ascending (TypedExtractor contract)
         scored.sortBy { case (score, e) => (-score, e.iri) }.head._2
       }
     }
@@ -37,13 +37,13 @@ class PRSpec extends GraftSpec {
     // (PageGen.aliasSiteSuffix) — the oracle mirrors the source semantics
     def siteIri(iri: String): String =
       if (PageGen.isAliasSite(g)) PageGen.aliasIri(iri) else iri
-    val mentionQ = links.map(e => (p.url, MentionDetector.mentionsPred, siteIri(e.iri), g)).toSet
-    val typeQ = links.map(e => (siteIri(e.iri), MentionDetector.typePred,
+    val mentionQ = links.map(e => (p.url, Vocab.mentionsPred, siteIri(e.iri), g)).toSet
+    val typeQ = links.map(e => (siteIri(e.iri), Vocab.typePred,
       "http://kg.example.org/class/" + e.etype, g)).toSet
-    val langQ = Set((p.url, MentionDetector.langPred, p.lang, g))
+    val langQ = Set((p.url, Vocab.langPred, p.lang, g))
     val fmt = new java.text.SimpleDateFormat("yyyy-MM-dd'T'HH:mm:ss'Z'")
     fmt.setTimeZone(java.util.TimeZone.getTimeZone("UTC"))
-    val tsQ = Set((p.url, MentionDetector.crawledPred, fmt.format(p.warc_ts), g))
+    val tsQ = Set((p.url, Vocab.crawledPred, fmt.format(p.warc_ts), g))
     mentionQ ++ typeQ ++ langQ ++ tsQ
   }
 

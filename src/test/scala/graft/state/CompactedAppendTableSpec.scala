@@ -73,19 +73,20 @@ class CompactedAppendTableSpec extends GraftSpec {
     assert(CompactedAppendTable.read(spark, root).get.count() == 20)
   }
 
-  test("legacy flat-layout dir (pre-generation mode-append) migrates on first touch") {
+  test("flat-layout dir fails loudly, naming the path") {
     val root = tmpDir("cat5") + "/t"
-    // a previous build's layout: parquet files directly at the root
+    // a plain mode("append") layout: parquet files directly at the root,
+    // no generation dirs, no pointer — not a layout this table writes
     Seq((1L, "old"), (2L, "old")).toDF("batchId", "tag")
       .write.mode("append").parquet(root)
-    assert(CompactedAppendTable.exists(spark, root),
-      "legacy state dir read as non-existent (would trigger full duplicate republish)")
-    assert(CompactedAppendTable.read(spark, root).get.count() == 2)
-    // appends land in the migrated table; nothing lost
-    CompactedAppendTable.append(spark, root,
-      Seq((3L, "new")).toDF("batchId", "tag"))
-    val data = CompactedAppendTable.read(spark, root).get
-    assert(data.count() == 3)
-    assert(data.filter(col("tag") === "old").count() == 2)
+    for (touch <- Seq[() => Any](
+      () => CompactedAppendTable.exists(spark, root),
+      () => CompactedAppendTable.read(spark, root),
+      () => CompactedAppendTable.append(spark, root, Seq((3L, "new")).toDF("batchId", "tag")))) {
+      val err = intercept[RuntimeException](touch()).getMessage
+      assert(err.contains(root) && err.contains("root-level *.parquet"), err)
+    }
+    // nothing was moved or appended
+    assert(!new java.io.File(s"$root/gen_0").exists())
   }
 }

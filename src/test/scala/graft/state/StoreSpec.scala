@@ -19,38 +19,39 @@ class SnapshotStoreSpec extends GraftSpec {
     assert(back.select(sum("v")).head().getLong(0) == 5050)
   }
 
-  test("mixed-schema chain folds to the common columns, both directions") {
-    // schema evolution across binary generations (the canon `sig` column):
-    // a base without the evolved column under a delta that carries it — or
-    // the reverse, after a binary rollback wrote one old-format delta —
-    // must fold to the columns every generation has, never crash the read
-    // and never resurrect half-present values.
+  test("mixed-schema chain fails the read loudly, both directions") {
+    // This store writes one schema per table, so a chain whose generations
+    // differ in columns is foreign or damaged state: the read fails naming
+    // the store, the differing generation and the columns — it never folds
+    // to a subset (which would silently drop a column from every row).
     def mk(root: String) = new SnapshotStore(spark, root, numBuckets = 2,
       deleteKeys = Seq("k"), maxDeltas = 10)
-    // old base (k, v), new delta adds `extra`
-    val st1 = mk(tmpDir("storeEvo1"))
+    def readError(st: SnapshotStore): String =
+      intercept[RuntimeException](st.read()).getMessage
+    // base (k, v), delta adds `extra`
+    val root1 = tmpDir("storeEvo1")
+    val st1 = mk(root1)
     val base1 = (1 to 10).map(i => (s"k$i", i)).toDF("k", "v")
       .withColumn("bucket", st1.bucketCol(col("k")))
     st1.commitFull(base1, 0L)
     val add1 = Seq(("k1", 100, "x")).toDF("k", "v", "extra")
       .withColumn("bucket", st1.bucketCol(col("k")))
     st1.commitDelta(add1, add1.select("k", "bucket"), 1L)
-    val back1 = st1.read().get
-    assert(back1.columns.toSeq == Seq("k", "v", "bucket"), back1.columns.mkString(","))
-    assert(back1.filter(col("k") === "k1").select("v").as[Int].head() == 100)
-    assert(back1.count() == 10)
-    // new base (k, v, extra), rolled-back delta without `extra`
-    val st2 = mk(tmpDir("storeEvo2"))
+    val e1 = readError(st1)
+    assert(e1.contains(root1) && e1.contains("delta snapshot tag 1") &&
+      e1.contains("extra [extra]"), e1)
+    // base (k, v, extra), delta without `extra`
+    val root2 = tmpDir("storeEvo2")
+    val st2 = mk(root2)
     val base2 = (1 to 10).map(i => (s"k$i", i, s"e$i")).toDF("k", "v", "extra")
       .withColumn("bucket", st2.bucketCol(col("k")))
     st2.commitFull(base2, 0L)
     val add2 = Seq(("k2", 200)).toDF("k", "v")
       .withColumn("bucket", st2.bucketCol(col("k")))
     st2.commitDelta(add2, add2.select("k", "bucket"), 1L)
-    val back2 = st2.read().get
-    assert(back2.columns.toSeq == Seq("k", "v", "bucket"), back2.columns.mkString(","))
-    assert(back2.filter(col("k") === "k2").select("v").as[Int].head() == 200)
-    assert(back2.count() == 10)
+    val e2 = readError(st2)
+    assert(e2.contains(root2) && e2.contains("delta snapshot tag 1") &&
+      e2.contains("missing [extra]"), e2)
   }
 
   test("mergeBuckets rewrites only affected buckets; others carried forward") {
@@ -148,6 +149,13 @@ class SnapshotStoreSpec extends GraftSpec {
     assert(left.count(_.startsWith("manifest_")) == 1, "stale manifests survive vacuum")
     assert(st.read().get.select("k", "v").as[(String, Int)].collect().toMap == model,
       "vacuum deleted referenced data")
+    // a 2-field `D<TAB>tag` delta line is not a form this store writes: the
+    // read fails naming the manifest instead of deriving a directory
+    val mPath = java.nio.file.Paths.get(s"$root/manifest_${f"${10L}%014d"}.txt")
+    java.nio.file.Files.writeString(mPath, java.nio.file.Files.readString(mPath) + "\nD\t10")
+    java.nio.file.Files.deleteIfExists(mPath.resolveSibling(s".${mPath.getFileName}.crc"))
+    val err = intercept[RuntimeException](st.read()).getMessage
+    assert(err.contains("bad manifest delta line") && err.contains(mPath.toString), err)
   }
 
   test("a committed store reads back as ONE relation, not a per-bucket union") {

@@ -271,6 +271,12 @@ class PipelineSpec extends GraftSpec {
     assert(st.filter(!(col("sig") <=>
         graft.canon.IriCanonicalizer.signatureColumn(col("id")))).isEmpty,
       "stored sig diverges from the write-side recompute")
+    // a canon store without `sig` is not one this pipeline writes: the next
+    // canon-map read refuses it, naming the store
+    pipe.canon.commitFull(st.drop("sig").localCheckpoint(), 2L)
+    val err = intercept[RuntimeException](
+      pipe.pageContributions(spark.createDataset(Seq(p1)))).getMessage
+    assert(err.contains(s"canon store $root/canon has no `sig` column"), err)
   }
 
   test("crash between store finalizes is repaired from the commit marker") {
